@@ -206,46 +206,6 @@ def assign_components(keys: DataFrame, links: DataFrame) -> DataFrame:
     )
 
 
-def delta_component_remap(prev_assign: DataFrame, delta_links: DataFrame) -> DataFrame:
-    """(rep, component): merged id per representative touched by delta
-    links — the O(delta) core of :func:`assign_components_delta`,
-    exposed separately (round 6) so the pipeline can prune its bucketed
-    assignment writes to only the components this remap actually moves.
-
-    Endpoints of delta links map to their current representative
-    (previous component for old norms, own node id for new); connected
-    components over that O(delta)-edge representative graph yields the
-    merged id per representative. Rows with rep == component are
-    untouched components that happened to gain an internal link.
-    """
-    node_of = F.concat_ws("|", "type", "norm")
-    prev_rep = prev_assign.select("type", "norm", F.col("component").alias("rep"))
-    ends = (
-        delta_links.select("type", F.col("src").alias("norm"))
-        .unionByName(delta_links.select("type", F.col("dst").alias("norm")))
-        .distinct()
-    )
-    reps = ends.join(prev_rep, ["type", "norm"], "left").select(
-        "type", "norm", F.coalesce("rep", node_of).alias("rep")
-    )
-    r_src = reps.select(
-        F.col("type").alias("ts"), F.col("norm").alias("sn"), F.col("rep").alias("rs")
-    )
-    r_dst = reps.select(
-        F.col("type").alias("td"), F.col("norm").alias("dn"), F.col("rep").alias("rd")
-    )
-    rep_edges = (
-        delta_links.join(
-            r_src, (F.col("type") == F.col("ts")) & (F.col("src") == F.col("sn"))
-        )
-        .join(r_dst, (F.col("type") == F.col("td")) & (F.col("dst") == F.col("dn")))
-        .select(F.col("rs").alias("src"), F.col("rd").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return connected_components(rep_edges).withColumnRenamed("node", "rep")
-
-
 def assign_components_delta(
     prev_assign: DataFrame, delta_links: DataFrame, new_norms: DataFrame
 ) -> DataFrame:
@@ -272,7 +232,31 @@ def assign_components_delta(
     byte-identity).
     """
     node_of = F.concat_ws("|", "type", "norm")
-    remap = delta_component_remap(prev_assign, delta_links)
+    prev_rep = prev_assign.select("type", "norm", F.col("component").alias("rep"))
+    ends = (
+        delta_links.select("type", F.col("src").alias("norm"))
+        .unionByName(delta_links.select("type", F.col("dst").alias("norm")))
+        .distinct()
+    )
+    reps = ends.join(prev_rep, ["type", "norm"], "left").select(
+        "type", "norm", F.coalesce("rep", node_of).alias("rep")
+    )
+    r_src = reps.select(
+        F.col("type").alias("ts"), F.col("norm").alias("sn"), F.col("rep").alias("rs")
+    )
+    r_dst = reps.select(
+        F.col("type").alias("td"), F.col("norm").alias("dn"), F.col("rep").alias("rd")
+    )
+    rep_edges = (
+        delta_links.join(
+            r_src, (F.col("type") == F.col("ts")) & (F.col("src") == F.col("sn"))
+        )
+        .join(r_dst, (F.col("type") == F.col("td")) & (F.col("dst") == F.col("dn")))
+        .select(F.col("rs").alias("src"), F.col("rd").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+    remap = connected_components(rep_edges).withColumnRenamed("node", "rep")
     old_part = (
         prev_assign.join(remap, prev_assign["component"] == remap["rep"], "left")
         .select(

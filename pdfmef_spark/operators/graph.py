@@ -104,53 +104,6 @@ def _resolve_edges(triples: DataFrame, smap) -> DataFrame:
     )
 
 
-def resolve_edges_flagged(triples: DataFrame, smap) -> DataFrame:
-    """:func:`_resolve_edges` plus a ``doc_src`` flag: true when the
-    group's subject slot is a DOC (src = xxhash64('DOC', url) of a
-    document processed in THIS batch when ``triples`` is a batch
-    delta). Every row of a group shares its subject, so the flag is
-    constant per group. The incremental pipeline uses it to split a
-    delta into pure-append edges (a first-time-processed url can never
-    collide with an existing (src, dst, pred) group) and
-    merge-with-history edges (entity subjects), which is what keeps the
-    bucket-pruned edge write O(delta)."""
-    t = triples.filter(
-        ~F.col("pred").isin(
-            "hasTitle", "hasAbstract", "hasFigure", "affiliationString"
-        )
-    )
-    subj_map = smap.select(
-        F.col("type").alias("subj_type"),
-        F.col("surface").alias("subj"),
-        F.col("entity_id").alias("src_id"),
-    )
-    t = t.join(subj_map, ["subj_type", "subj"], "left").withColumn(
-        "src",
-        F.when(F.col("subj_type") == "DOC", F.xxhash64(F.lit("DOC"), F.col("subj"))).otherwise(
-            F.col("src_id")
-        ),
-    )
-    obj_map = smap.select(
-        F.col("type").alias("obj_type"),
-        F.col("surface").alias("obj"),
-        F.col("entity_id").alias("dst_id"),
-    )
-    t = t.join(obj_map, ["obj_type", "obj"], "left").withColumn(
-        "dst",
-        F.when(F.col("obj_type") == "DOC", F.xxhash64(F.lit("DOC"), F.col("obj"))).otherwise(
-            F.col("dst_id")
-        ),
-    )
-    return (
-        t.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .groupBy("src", "dst", "pred")
-        .agg(
-            F.count("*").alias("weight"),
-            F.max(F.col("subj_type") == F.lit("DOC")).alias("doc_src"),
-        )
-    )
-
-
 def materialize_graph(
     triples: DataFrame, keys: DataFrame, assignments: DataFrame, broadcast_map: bool = True
 ) -> tuple[DataFrame, DataFrame]:
@@ -224,12 +177,7 @@ def materialize_graph_delta(
     prev ∪ delta.
     """
     ent_nodes, surface_map = entity_nodes(keys, assignments)
-    d_nodes = (
-        # tolerate layout columns (nb bucketing) on the stored table
-        prev_doc_nodes.select("entity_id", "canonical", "type", "n_mentions")
-        .unionByName(doc_nodes(trip_delta))
-        .distinct()
-    )
+    d_nodes = prev_doc_nodes.unionByName(doc_nodes(trip_delta)).distinct()
     nodes = ent_nodes.unionByName(d_nodes)
 
     rm = F.broadcast(remap.select("old_id", "new_id"))

@@ -23,20 +23,11 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 STAGES = ["extracted", "triples", "mentions", "links", "assignments", "nodes", "edges"]
-
-# hive-bucket count for the incremental assignments table (layout key:
-# pmod(xxhash64(component), N)). Sized so a delta tick touches few
-# buckets while full-table scans stay a handful of files per bucket;
-# at cluster scale this is the Iceberg bucket(N, component) transform
-# and N grows with the vocabulary.
-ASSIGN_BUCKETS = 64
-# hive-bucket count for the incremental nodes (type, nb) / edges
-# (pred, eb) tables — same O(delta)-write rationale
-GRAPH_BUCKETS = 64
 
 
 @dataclass
@@ -103,7 +94,6 @@ def _write_stage(
     out_metrics: dict | None = None,
     writer_options: dict | None = None,
     counts_path: str | None = None,
-    mode: str = "overwrite",
 ) -> DataFrame:
     """Write stage output + manifest.
 
@@ -132,11 +122,7 @@ def _write_stage(
         err_expr.cast("long").alias("n_errors"),
         F.coalesce(F.bit_xor(F.xxhash64(F.struct("*"))), F.lit(0)).alias("sha_long"),
     )
-    # mode="append" is the bucket-pruned incremental write (the caller
-    # has already deleted exactly the hive partitions it re-emits): the
-    # observation totals then describe the DELTA rows, not the table —
-    # per-partition manifest counts still cover the whole directory
-    writer = observed.write.mode(mode)
+    writer = observed.write.mode("overwrite")
     if writer_options:
         writer = writer.options(**writer_options)
     if partition_by:
@@ -182,27 +168,109 @@ def _write_stage(
          metrics_json)
     )
     _append_manifest(out_dir, records)
-    if int(totals["rows_out"] or 0) == 0:
-        # a zero-row stage under dynamic partition overwrite writes no
+    if int(totals["rows_out"] or 0) == 0 and not _has_parquet(path):
+        # a zero-row stage under a partitioned overwrite writes no
         # parquet files (first incremental batch with e.g. no triples),
         # so a read-back can't infer a schema — return an empty frame
-        # with the stage's own schema instead of failing the run
+        # with the stage's own schema instead of failing the run. A
+        # zero-row batch into a directory that already holds earlier
+        # batches reads back like any other write: the result is always
+        # the whole stage table, never just this write's rows.
         return spark.createDataFrame([], df.schema)
-    # read back with the KNOWN schema (round 6, VERDICT r5 #6): with an
-    # inferred schema the reader additionally opens parquet FOOTERS at
-    # DataFrame construction, a cost that grows with the accumulated
-    # batch_id (and now bucket) partitions; providing the written
-    # frame's schema skips that (measured ~17% of construction at 800
-    # files — partition-directory LISTING itself still happens either
-    # way). Hive partition columns (batch_id/cb/nb/eb) ride the written
-    # frame itself, so df.schema already includes them; their values
-    # are recovered from the directory names exactly as before.
+    # read back with the KNOWN schema: with an inferred schema the
+    # reader additionally opens parquet FOOTERS at DataFrame
+    # construction, a cost that grows with the accumulated batch_id
+    # partitions; providing the written frame's schema skips that
+    # (measured ~17% of construction at 800 files — partition-directory
+    # LISTING itself still happens either way). Hive partition columns
+    # ride the written frame itself, so df.schema already includes them;
+    # their values are recovered from the directory names.
     try:
         return spark.read.schema(df.schema).parquet(path)
     except Exception:
         # e.g. a filesystem where even the lazy reader probes the root
         # path at construction — fall back to the inferring read
         return spark.read.parquet(path)
+
+
+def _has_parquet(path: str) -> bool:
+    """Whether ``path`` holds any parquet data file (in any partition
+    dir). A zero-row partitioned write leaves a directory with none, and
+    a schema-less read of such a directory throws."""
+    return any(f.endswith(".parquet") for _, _, files in os.walk(path) for f in files)
+
+
+def _run_stage(
+    spark: SparkSession,
+    run: PipelineRun,
+    name: str,
+    build,
+    completed: set[str] = frozenset(),
+    batch_id: int | None = None,
+    **write_kw,
+) -> DataFrame:
+    """Build, write and time one stage; record its StageResult.
+
+    A stage in ``completed`` is read back instead of rebuilt (resume).
+    With ``batch_id`` the stage is doc-local: its rows land in their own
+    ``batch_id=<B>`` hive partition under DYNAMIC partition overwrite,
+    so re-running a crashed batch replaces exactly that partition, and
+    the returned frame is the whole table across batches.
+    """
+    if name in completed:
+        df = spark.read.parquet(f"{run.out_dir}/{name}")
+        run.results[name] = StageResult(name, df, recomputed=False)
+        return df
+    t0 = time.time()
+    df = build()
+    if batch_id is not None:
+        df = df.withColumn("batch_id", F.lit(batch_id))
+        write_kw.update(
+            partition_by=["batch_id"],
+            writer_options={"partitionOverwriteMode": "dynamic"},
+            counts_path=f"{run.out_dir}/{name}/batch_id={batch_id}",
+        )
+    metrics: dict = {}
+    out = _write_stage(
+        spark, run.out_dir, run.run_id, name, df, out_metrics=metrics, **write_kw
+    )
+    run.results[name] = StageResult(
+        name, out, recomputed=True, seconds=round(time.time() - t0, 2),
+        metrics=metrics or None,
+    )
+    return out
+
+
+def _write_graph(
+    spark: SparkSession,
+    run: PipelineRun,
+    nodes_df: DataFrame,
+    edges_df: DataFrame,
+    completed: set[str] = frozenset(),
+) -> None:
+    """Write the graph tail: nodes hive-partitioned by type, edges by
+    pred, so per-type/per-predicate reads prune partitions at the scan.
+
+    Nodes and edges share no data dependency — both write jobs are
+    submitted from a 2-thread pool so the tail tasks of one back-fill
+    cores the other's stragglers leave idle. Jobs submitted from driver
+    threads interleave in Spark's FIFO scheduler; manifest appends are
+    per-file (uuid-named) and run.results updates are GIL-atomic dict
+    stores, so _run_stage is thread-safe as-is.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_nodes = pool.submit(
+            _run_stage, spark, run, "nodes", lambda: nodes_df,
+            completed=completed, partition_by=["type"],
+        )
+        f_edges = pool.submit(
+            _run_stage, spark, run, "edges", lambda: edges_df,
+            completed=completed, partition_by=["pred"],
+        )
+        f_nodes.result()
+        f_edges.result()
 
 
 def _append_manifest(out_dir: str, records: list[tuple]) -> None:
@@ -292,26 +360,7 @@ def run_pipeline(
 
     completed = _completed_stages(spark, out_dir)
 
-    def stage(
-        name: str, build, error_col: str | None = None,
-        partition_by: list[str] | None = None,
-        extra_obs=None,
-    ) -> DataFrame:
-        if name in completed:
-            df = spark.read.parquet(f"{out_dir}/{name}")
-            run.results[name] = StageResult(name, df, recomputed=False)
-            return df
-        t0 = time.time()
-        metrics: dict = {}
-        df = _write_stage(
-            spark, out_dir, run_id, name, build(), error_col=error_col,
-            partition_by=partition_by, extra_obs=extra_obs, out_metrics=metrics,
-        )
-        run.results[name] = StageResult(
-            name, df, recomputed=True, seconds=round(time.time() - t0, 2),
-            metrics=metrics or None,
-        )
-        return df
+    stage = partial(_run_stage, spark, run, completed=completed)
 
     extracted = stage("extracted", lambda: extract.extract_pages(pages), error_col="error")
     triples = stage("triples", lambda: triples_op.extract_triples(extracted))
@@ -343,27 +392,13 @@ def run_pipeline(
         assignments = stage(
             "assignments", lambda: components.assign_components(keys, links)
         )
-
         # materialize_graph is pure plan construction (no jobs run until a
         # stage writes), so building both outputs up front costs nothing on
         # resume and each stage writes its own DataFrame — no hand-off state
         nodes_df, edges_df = graph.materialize_graph(
             triples, keys, assignments, broadcast_map=broadcast_map
         )
-        # nodes and edges share no data dependency — submit both write
-        # jobs from a 2-thread pool so the tail tasks of one back-fill
-        # cores the other's stragglers leave idle (guide §2.6). Jobs
-        # submitted from driver threads interleave in Spark's FIFO
-        # scheduler; manifest appends are per-file (uuid-named) and
-        # run.results updates are GIL-atomic dict stores, so the stage
-        # helper is thread-safe as-is.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_nodes = pool.submit(stage, "nodes", lambda: nodes_df, None, ["type"])
-            f_edges = pool.submit(stage, "edges", lambda: edges_df, None, ["pred"])
-            f_nodes.result()
-            f_edges.result()
+        _write_graph(spark, run, nodes_df, edges_df, completed=completed)
     finally:
         keys.unpersist()
     if analytics:
@@ -412,24 +447,12 @@ def run_pipeline_incremental(
       member norm is a pure function of component membership, so a
       cross-batch merge reduces to a (old_id -> new_id) remap of the
       previous edges table plus resolution of only the new batch's
-      triples. Tail input per
+      triples (operators/graph.materialize_graph_delta). Tail input per
       batch is O(prev graph + delta + vocab), never O(all triples);
-      byte-identity with from-scratch is pinned by tests.
-      Round 6 (VERDICT r5 #1): the tail tables are hive-BUCKETED —
-      assignments by pmod(xxhash64(component), ASSIGN_BUCKETS), nodes
-      by (type, pmod(xxhash64(entity_id), GRAPH_BUCKETS)) with
-      per-batch append partitions for new DOC nodes, edges by
-      (pred, pmod(xxhash64(src), GRAPH_BUCKETS)) with per-batch append
-      partitions for DOC-subject delta edges — and a merge-only tick
-      REWRITES only buckets holding a remapped endpoint, a
-      membership/freq-affected entity, or an entity-subject delta
-      edge: affected rows are read partition-pruned, checkpointed,
-      their bucket dirs dropped, replacements appended. The per-tick
-      tail WRITE is O(affected buckets), no longer O(vocab)/O(graph);
-      the scans that locate affected rows remain columnar O(table)
-      reads. Untouched bucket files provably stay in place
-      (mtime-pinned tests) and content stays byte-identical to the
-      unpruned rebuild. Fallbacks to
+      each tick still rewrites assignments, nodes and edges whole, in
+      the same layout as ``run_pipeline`` (assignments flat, nodes by
+      type, edges by pred); byte-identity with from-scratch is pinned
+      by tests. Fallbacks to
       the full merged-triples rebuild: first batch, a crash-retry of a
       batch whose tail already wrote (manifest run_id guard — the delta
       is already folded into prev_edges), and a component SPLIT (only
@@ -471,67 +494,29 @@ def run_pipeline_incremental(
                     name, spark.read.parquet(p), recomputed=False
                 )
         return run
-    dyn = {"partitionOverwriteMode": "dynamic"}
 
-    def inc_stage(name: str, df: DataFrame, error_col: str | None = None) -> None:
-        t0 = time.time()
-        out = _write_stage(
-            spark, out_dir, run_id, name,
-            df.withColumn("batch_id", F.lit(batch_id)),
-            error_col=error_col, partition_by=["batch_id"],
-            writer_options=dyn,
-            counts_path=f"{out_dir}/{name}/batch_id={batch_id}",
-        )
-        run.results[name] = StageResult(
-            name, out, recomputed=True, seconds=round(time.time() - t0, 2)
-        )
+    stage = partial(_run_stage, spark, run)
+    batch_stage = partial(_run_stage, spark, run, batch_id=batch_id)
 
     extracted_d = extract.extract_pages(delta).persist()
     try:
-        inc_stage("extracted", extracted_d, error_col="error")
+        batch_stage("extracted", lambda: extracted_d, error_col="error")
         triples_d = triples_op.extract_triples(extracted_d).persist()
         try:
-            inc_stage("triples", triples_d)
+            triples = batch_stage("triples", lambda: triples_d)
             mentions_d = triples_op.mentions_from_triples(triples_d)
-            inc_stage("mentions", mentions_d)
+            batch_stage("mentions", lambda: mentions_d)
             # per-batch vocabulary DELTA: surface freq is a plain count
             # and each url lands in exactly one batch, so the full
             # vocabulary is the SUM over batch deltas — the tail below
             # then never rescans the historical mentions table, it
             # aggregates vocabulary-sized deltas (the difference between
             # O(corpus) and O(vocab x batches) per incremental tick)
-            inc_stage("surfaces", linking.surface_keys(mentions_d))
+            surfaces = batch_stage("surfaces", lambda: linking.surface_keys(mentions_d))
         finally:
             triples_d.unpersist()
     finally:
         extracted_d.unpersist()
-
-    def _merged(stage_name: str) -> DataFrame:
-        # read EVERY batch partition; a stage whose batches were all
-        # zero-row has no parquet files yet — fall back to the typed
-        # empty frame the write step returned (ADVICE r3). The fallback
-        # is ONLY for the no-files case: any other read failure while
-        # earlier batches exist would silently rebuild the global graph
-        # from one batch, so re-raise everything else (ADVICE r4).
-        stage_dir = f"{out_dir}/{stage_name}"
-        if not any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(stage_dir)
-            for f in files
-        ):
-            return run.results[stage_name].df
-        return spark.read.parquet(stage_dir)
-
-    def tail_stage(name: str, build, partition_by=None, mode="overwrite") -> DataFrame:
-        t0 = time.time()
-        df = _write_stage(
-            spark, out_dir, run_id, name, build(), partition_by=partition_by,
-            mode=mode,
-        )
-        run.results[name] = StageResult(
-            name, df, recomputed=True, seconds=round(time.time() - t0, 2)
-        )
-        return df
 
     # graph-tail mode: delta + remap when the previous batch's tail
     # output exists AND was not written by THIS batch_id (a crash after
@@ -542,11 +527,7 @@ def run_pipeline_incremental(
     # snapshots are localCheckpoint-ed BEFORE the overwrite of their
     # dirs — at cluster scale this read-prev-then-overwrite sequence is
     # an Iceberg snapshot read, local parquet has no isolation.
-    def _has_parquet(path: str) -> bool:
-        return os.path.exists(path) and any(
-            f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
-        )
-
+    #
     # file presence, not dir existence: a zero-row stage under a
     # partitioned overwrite leaves a dir with no parquet files, and a
     # schema-less read of it throws. Until every graph-tail table has
@@ -570,21 +551,17 @@ def run_pipeline_incremental(
         )
         poisoned = last is not None and last.run_id == run_id
     use_delta = tail_ready and not poisoned
-    graph_bucketed = False
     if use_delta:
-        # lazy reads: every consumer is materialized (localCheckpoint /
-        # collect) BEFORE any of these directories is deleted or
-        # appended to, so no full-table snapshot checkpoint is paid
-        prev_nodes_lazy = spark.read.parquet(f"{out_dir}/nodes")
-        prev_edges_lazy = spark.read.parquet(f"{out_dir}/edges")
-        graph_bucketed = (
-            "nb" in prev_nodes_lazy.columns and "eb" in prev_edges_lazy.columns
+        prev_assign = spark.read.parquet(f"{out_dir}/assignments").localCheckpoint()
+        prev_doc_nodes = (
+            spark.read.parquet(f"{out_dir}/nodes")
+            .filter(F.col("type") == "DOC")
+            .localCheckpoint()
         )
-        prev_doc_nodes = prev_nodes_lazy.filter(F.col("type") == "DOC")
+        prev_edges = spark.read.parquet(f"{out_dir}/edges").localCheckpoint()
 
     keys = (
-        _merged("surfaces")
-        .groupBy("type", "norm", "surface")
+        surfaces.groupBy("type", "norm", "surface")
         .agg(F.sum("freq").alias("freq"))
         .persist()
     )
@@ -620,15 +597,14 @@ def run_pipeline_incremental(
             # instead of ~18 block-key rows per norm — the anti-join
             # scans 18x fewer bytes
             prev_norms = (
-                _merged("surfaces")
-                .filter(F.col("batch_id") != batch_id)
+                surfaces.filter(F.col("batch_id") != batch_id)
                 .select("type", "norm")
                 .distinct()
             )
             new_norms = norms_now.join(prev_norms, ["type", "norm"], "left_anti")
         else:
             new_norms = norms_now  # bootstrap: key the whole vocabulary
-        inc_stage("bucket_keys", linking.tag_block_keys(new_norms))
+        batch_stage("bucket_keys", lambda: linking.tag_block_keys(new_norms))
         links_mode = "full"
         if links_delta_ok:
             keyed_all = spark.read.parquet(bk_dir).withColumn(
@@ -644,11 +620,11 @@ def run_pipeline_incremental(
                     .parquet(f"{out_dir}/links")
                     .localCheckpoint()
                 )
-                # schema-version guard (ADVICE r5): parquet read does
-                # not enforce nullability, so a links table written
-                # before `type` existed reads back as silent nulls and
-                # would corrupt the concat_ws component keys — detect
-                # and rebuild fully instead
+                # schema-version guard: parquet read does not enforce
+                # nullability, so a links table written before `type`
+                # existed reads back as silent nulls and would corrupt
+                # the concat_ws component keys — detect and rebuild
+                # fully instead
                 if prev_links.filter(F.col("type").isNull()).limit(1).count() > 0:
                     links_mode = "full"
                 else:
@@ -659,11 +635,9 @@ def run_pipeline_incremental(
                     ).localCheckpoint()
                     links_mode = "delta"
         if links_mode == "delta":
-            links = tail_stage(
-                "links", lambda: prev_links.unionByName(delta_links)
-            )
+            links = stage("links", lambda: prev_links.unionByName(delta_links))
         else:
-            links = tail_stage(
+            links = stage(
                 "links",
                 lambda: linking.link_entities(threshold=link_threshold, keys=keys),
             )
@@ -675,151 +649,41 @@ def run_pipeline_incremental(
             # tail no longer holds. The remap's n_new>1 split probe
             # cannot catch every split either: a 2-way split whose
             # min-norm fragment keeps the old component id shows
-            # n_new=1 over the CHANGED rows it inspects (ADVICE r5,
-            # high). Rebuild the whole tail from merged triples on any
-            # full-links tick — merge-only ticks (links strictly grew)
-            # are the only sound delta ticks, and on those a split is
-            # impossible by construction.
+            # n_new=1 over the CHANGED rows it inspects. Rebuild the
+            # whole tail from merged triples on any full-links tick —
+            # merge-only ticks (links strictly grew) are the only sound
+            # delta ticks, and on those a split is impossible by
+            # construction.
             use_delta = False
-        # assignments live hive-bucketed by component hash (cb =
-        # pmod(xxhash64(component), ASSIGN_BUCKETS), round 6, VERDICT r5
-        # #1): a merge-only tick touches only the buckets holding a
-        # merged representative or a new norm, so the per-tick
-        # assignments WRITE — previously a full-table rewrite, the
-        # acknowledged O(vocab) tick term — prunes to O(delta) buckets:
-        # the affected buckets are read (partition-pruned), remapped,
-        # checkpointed, their directories dropped, and the replacement
-        # rows appended. Content is byte-identical to
-        # components.assign_components_delta over the full table
-        # (every changed row's component equals some remapped rep, so
-        # it lives in an affected bucket by construction; pinned by
-        # tests). Full rebuilds overwrite the whole directory, which
-        # also clears buckets whose component id vanished in a merge.
-        _cb = F.pmod(F.xxhash64("component"), F.lit(ASSIGN_BUCKETS))
-        assignments_mode = "full"
-        changed = None
-        if links_mode == "delta" and use_delta:
+        if use_delta:
+            # merge-only tick (links grew, never shrank), so component
+            # assignment is a remap of O(delta) representatives over
+            # prev_assign — no CC over the full links table
+            # (components.assign_components_delta; equality pinned)
             new_norms_now = (
                 keyed_all.filter(F.col("is_new")).select("type", "norm").distinct()
             )
-            prev_a_lazy = spark.read.parquet(f"{out_dir}/assignments")
-            if "cb" in prev_a_lazy.columns:
-                remap_a = components.delta_component_remap(
-                    prev_a_lazy.select("type", "norm", "component"), delta_links
-                ).localCheckpoint(eager=True)
-                changed = remap_a.filter(F.col("rep") != F.col("component"))
-                node_of = F.concat_ws("|", "type", "norm")
-                new_part = (
-                    new_norms_now.distinct()
-                    .withColumn("node", node_of)
-                    .join(remap_a, F.col("node") == remap_a["rep"], "left")
-                    .select(
-                        "type", "norm",
-                        F.coalesce(remap_a["component"], F.col("node")).alias("component"),
-                    )
-                )
-                aff = (
-                    changed.select(F.col("rep").alias("c"))
-                    .unionByName(changed.select(F.col("component").alias("c")))
-                    .unionByName(new_part.select(F.col("component").alias("c")))
-                )
-                buckets = sorted(
-                    int(r.b)
-                    for r in aff.select(
-                        F.pmod(F.xxhash64("c"), F.lit(ASSIGN_BUCKETS)).alias("b")
-                    ).distinct().collect()
-                )
-                ch = changed.select(
-                    F.col("rep").alias("r_rep"), F.col("component").alias("r_new")
-                )
-                old_aff = (
-                    prev_a_lazy.filter(F.col("cb").isin(buckets))
-                    .select("type", "norm", "component")
-                    .join(F.broadcast(ch), F.col("component") == F.col("r_rep"), "left")
-                    .select(
-                        "type", "norm",
-                        F.coalesce(F.col("r_new"), F.col("component")).alias("component"),
-                    )
-                )
-                # materialize BEFORE the affected bucket dirs are
-                # dropped — the plan reads the very files being replaced
-                delta_out = (
-                    old_aff.unionByName(new_part)
-                    .withColumn("cb", _cb)
-                    .repartition("cb")
-                    .localCheckpoint(eager=True)
-                )
-                import shutil as _sh
-
-                for bkt in buckets:
-                    _sh.rmtree(f"{out_dir}/assignments/cb={bkt}", ignore_errors=True)
-                assignments = tail_stage(
-                    "assignments", lambda: delta_out,
-                    partition_by=["cb"], mode="append",
-                )
-                assignments_mode = "delta"
-            else:
-                # pre-bucketing layout on disk: snapshot it, then one
-                # full relayout rebuild; later ticks prune
-                prev_assign = prev_a_lazy.localCheckpoint()
-        if assignments_mode != "delta":
-            assignments = tail_stage(
+            assignments = stage(
                 "assignments",
-                lambda: components.assign_components(keys, links)
-                .withColumn("cb", _cb)
-                .repartition("cb"),
-                partition_by=["cb"],
+                lambda: components.assign_components_delta(
+                    prev_assign, delta_links, new_norms_now
+                ),
             )
-        run.results["assignments"].metrics = {"assignments_mode": assignments_mode}
+        else:
+            assignments = stage(
+                "assignments", lambda: components.assign_components(keys, links)
+            )
+        run.results["assignments"].metrics = {
+            "assignments_mode": "delta" if use_delta else "full"
+        }
         broadcast_map = keys.limit(100_001).count() <= 100_000
         if use_delta:
-            if changed is not None:
-                # entity-id remap derived from the O(delta) rep remap —
-                # same (old_id -> new_id) pairs graph.component_remap
-                # extracts from the full snapshots (component strings
-                # carry their type as the "type|" prefix), minus the
-                # O(vocab) snapshot join; reps that are brand-new node
-                # ids add rows whose old_id matches no historical edge
-                ctype = F.substring_index(F.col("rep"), "|", 1)
-                changed_ids = changed.select(
-                    F.xxhash64(ctype, F.col("rep")).alias("old_id"),
-                    F.xxhash64(ctype, F.col("component")).alias("new_id"),
-                ).distinct()
-                splits = changed_ids.groupBy("old_id").agg(
-                    F.count_distinct("new_id").alias("n_new")
-                )
-                remap = changed_ids.join(splits, "old_id").persist()
-            else:
-                remap = graph.component_remap(prev_assign, assignments).persist()
+            remap = graph.component_remap(prev_assign, assignments).persist()
             # a component SPLIT (possible only if LSH candidate caps
             # dropped previously-found links) makes old-edge remapping
             # ambiguous — rebuild from merged triples instead
             if remap.filter(F.col("n_new") > 1).limit(1).count() > 0:
                 use_delta = False
-        # nodes/edges get the same bucket-pruned treatment as
-        # assignments (round 6, VERDICT r5 #1): nodes hive-partitioned
-        # by (type, nb = pmod(xxhash64(entity_id), GRAPH_BUCKETS)) with
-        # new DOC nodes appended into a per-batch partition (a DOC id
-        # is a pure function of the url, so it never mutates); edges by
-        # (pred, eb = pmod(xxhash64(src), GRAPH_BUCKETS)) with
-        # DOC-subject delta edges appended per batch (a first-time-
-        # processed url's src can never collide with an existing
-        # (src, dst, pred) group). A delta tick rewrites only buckets
-        # holding a remapped endpoint, an entity whose membership or
-        # mention counts changed, or an entity-subject delta edge; the
-        # columnar scans that LOCATE those rows remain O(table) reads,
-        # but the write drops from a full-table rewrite to O(affected
-        # buckets). Content identity with the unpruned rebuild is
-        # pinned by test_incremental_pipeline.
-        import shutil as _sh
-
-        nb_of = lambda c: F.pmod(F.xxhash64(c), F.lit(GRAPH_BUCKETS))  # noqa: E731
-        node_cols = ["entity_id", "canonical", "type", "n_mentions"]
-        if use_delta and (not graph_bucketed or changed is None):
-            # pre-bucketing layout on disk (or an assignments-layout
-            # upgrade tick, which lacks the delta remap): one full
-            # relayout rebuild; later ticks prune
-            use_delta = False
         if use_delta:
             trip_delta_dir = f"{out_dir}/triples/batch_id={batch_id}"
             trip_delta = (
@@ -827,171 +691,16 @@ def run_pipeline_incremental(
                 if os.path.exists(trip_delta_dir)
                 else spark.createDataFrame([], schemas.TRIPLES)
             )
-            ent_all, surface_map = graph.entity_nodes(keys, assignments)
-            smap = F.broadcast(surface_map) if broadcast_map else surface_map
-            rm_rows = remap.select("old_id", "new_id").collect()
-            old_list = [r.old_id for r in rm_rows]
-            rm = F.broadcast(remap.select("old_id", "new_id"))
-
-            # ---- nodes: affected components = remapped ones + those
-            # whose member freqs this batch's surfaces delta touched
-            surf_delta_dir = f"{out_dir}/surfaces/batch_id={batch_id}"
-            aff_norms = (
-                spark.read.parquet(surf_delta_dir).select("type", "norm").distinct()
-                if os.path.exists(surf_delta_dir)
-                else spark.createDataFrame([], "type string, norm string")
+            nodes_df, edges_df = graph.materialize_graph_delta(
+                trip_delta, keys, assignments, prev_doc_nodes, prev_edges,
+                remap, broadcast_map=broadcast_map,
             )
-            a_sel = assignments.select("type", "norm", "component", "cb")
-            comp_delta = (
-                a_sel.join(aff_norms, ["type", "norm"], "leftsemi")
-                .select("component")
-            )
-            new_comps = (
-                comp_delta.unionByName(changed.select(F.col("component")))
-                .unionByName(new_part.select("component"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            comp_bkts = [
-                int(r.b)
-                for r in new_comps.select(
-                    F.pmod(F.xxhash64("component"), F.lit(ASSIGN_BUCKETS)).alias("b")
-                ).distinct().collect()
-            ]
-            memb = a_sel.filter(F.col("cb").isin(comp_bkts)).join(
-                F.broadcast(new_comps), "component", "leftsemi"
-            ).select("type", "norm", "component")
-            ent_aff, _ = graph.entity_nodes(keys, memb)
-            ctype2 = F.substring_index(F.col("rep"), "|", 1)
-            stale_ids = changed.select(
-                ctype2.alias("type"), F.xxhash64(ctype2, F.col("rep")).alias("entity_id")
-            ).distinct()
-            new_doc = graph.doc_nodes(trip_delta).join(
-                prev_doc_nodes.select("entity_id"), "entity_id", "left_anti"
-            )
-            ent_aff_b = ent_aff.withColumn("nb", nb_of(F.col("entity_id")))
-            pair_rows = (
-                ent_aff_b.select("type", "nb")
-                .unionByName(stale_ids.select("type", nb_of(F.col("entity_id")).alias("nb")))
-                .distinct()
-                .collect()
-            )
-            n_pairs = {(r.type, int(r.nb)) for r in pair_rows}
-            pair_str = F.concat_ws("#", F.col("type"), F.col("nb").cast("string"))
-            drop_ids = (
-                ent_aff.select("entity_id")
-                .unionByName(stale_ids.select("entity_id"))
-                .distinct()
-            )
-            prev_nodes_pruned = (
-                prev_nodes_lazy.filter(
-                    F.col("nb").isin([p[1] for p in n_pairs] or [-1])
-                    & F.col("type").isin([p[0] for p in n_pairs] or [""])
-                )
-                .filter(pair_str.isin([f"{t}#{n}" for t, n in n_pairs] or ["-"]))
-                .select(*node_cols, "nb")
-                .join(F.broadcast(drop_ids), "entity_id", "left_anti")
-            )
-            nodes_out = (
-                prev_nodes_pruned
-                .unionByName(ent_aff_b.select(*node_cols, "nb"))
-                .unionByName(
-                    new_doc.withColumn("nb", F.lit(GRAPH_BUCKETS + batch_id))
-                    .select(*node_cols, "nb")
-                )
-                .repartition("type", "nb")
-                .localCheckpoint(eager=True)
-            )
-            for t, n in sorted(n_pairs):
-                _sh.rmtree(f"{out_dir}/nodes/type={t}/nb={n}", ignore_errors=True)
-
-            # ---- edges: remapped rows move/merge; DOC-subject delta
-            # rows append; entity-subject delta rows merge
-            flagged = graph.resolve_edges_flagged(trip_delta, smap)
-            delta_append = flagged.filter(F.col("doc_src")).drop("doc_src")
-            delta_merge = flagged.filter(~F.col("doc_src")).drop("doc_src")
-            e_sel = prev_edges_lazy.select("src", "dst", "pred", "weight", "eb")
-            p1 = (
-                e_sel.filter(F.col("src").isin(old_list) | F.col("dst").isin(old_list))
-                .select("pred", "eb")
-                if old_list
-                else spark.createDataFrame([], "pred string, eb bigint")
-            )
-            p3 = (
-                e_sel.filter(F.col("src").isin(old_list))
-                .join(rm, e_sel["src"] == F.col("old_id"))
-                .select("pred", nb_of(F.col("new_id")).alias("eb"))
-                if old_list
-                else spark.createDataFrame([], "pred string, eb bigint")
-            )
-            p2 = delta_merge.select("pred", nb_of(F.col("src")).alias("eb"))
-            e_pairs = {
-                (r.pred, int(r.eb))
-                for r in p1.unionByName(p2.select("pred", "eb"))
-                .unionByName(p3.select("pred", "eb"))
-                .distinct()
-                .collect()
-            }
-            epair_str = F.concat_ws("#", F.col("pred"), F.col("eb").cast("string"))
-            prev_edges_pruned = (
-                e_sel.filter(
-                    F.col("eb").isin([p[1] for p in e_pairs] or [-1])
-                    & F.col("pred").isin([p[0] for p in e_pairs] or [""])
-                )
-                .filter(epair_str.isin([f"{p}#{e}" for p, e in e_pairs] or ["-"]))
-                .select("src", "dst", "pred", "weight")
-            )
-            e = prev_edges_pruned
-            for col in ("src", "dst"):
-                e = (
-                    e.join(rm.withColumnRenamed("old_id", col), col, "left")
-                    .withColumn(col, F.coalesce("new_id", F.col(col)))
-                    .drop("new_id")
-                )
-            merged_edges = (
-                e.unionByName(delta_merge)
-                .groupBy("src", "dst", "pred")
-                .agg(F.sum("weight").alias("weight"))
-                .withColumn("eb", nb_of(F.col("src")))
-            )
-            edges_out = (
-                merged_edges.unionByName(
-                    delta_append.withColumn("eb", F.lit(GRAPH_BUCKETS + batch_id))
-                )
-                .repartition("pred", "eb")
-                .localCheckpoint(eager=True)
-            )
-            for p, eb in sorted(e_pairs):
-                _sh.rmtree(f"{out_dir}/edges/pred={p}/eb={eb}", ignore_errors=True)
-
-            nodes_df, edges_df = nodes_out, edges_out
-            nodes_mode = edges_mode = "append"
         else:
-            nodes_full, edges_full = graph.materialize_graph(
-                _merged("triples").drop("batch_id"), keys, assignments,
+            nodes_df, edges_df = graph.materialize_graph(
+                triples.drop("batch_id"), keys, assignments,
                 broadcast_map=broadcast_map,
             )
-            nodes_df = (
-                nodes_full.withColumn("nb", nb_of(F.col("entity_id")))
-                .repartition("type", "nb")
-            )
-            edges_df = (
-                edges_full.withColumn("eb", nb_of(F.col("src")))
-                .repartition("pred", "eb")
-            )
-            nodes_mode = edges_mode = "overwrite"
-        # same independent-write overlap as the batch pipeline (§2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_nodes = pool.submit(
-                tail_stage, "nodes", lambda: nodes_df, ["type", "nb"], nodes_mode
-            )
-            f_edges = pool.submit(
-                tail_stage, "edges", lambda: edges_df, ["pred", "eb"], edges_mode
-            )
-            f_nodes.result()
-            f_edges.result()
+        _write_graph(spark, run, nodes_df, edges_df)
         run.results["edges"].metrics = {
             "tail_mode": "delta" if use_delta else "full"
         }

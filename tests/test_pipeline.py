@@ -118,8 +118,11 @@ def test_write_stage_readback_failure_nonempty_raises(spark, tmp_path, monkeypat
     """The zero-row empty-frame fallback must NOT swallow a read-back
     failure after a write that observed rows: that would silently feed
     empty data downstream (ADVICE r4). Non-empty write + broken
-    read-back => loud failure; zero-row write + broken read-back =>
-    typed empty frame."""
+    read-back => loud failure; zero-row write that leaves no parquet
+    file + broken read-back => typed empty frame; zero-row batch into a
+    directory holding an earlier batch => that batch's rows, not an
+    empty frame."""
+    from pyspark.sql import functions as F
     from pyspark.sql.readwriter import DataFrameReader
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
@@ -131,9 +134,21 @@ def test_write_stage_readback_failure_nonempty_raises(spark, tmp_path, monkeypat
         raise RuntimeError("simulated read-back failure")
 
     out = str(tmp_path / "ws")
-    # zero-row write: fallback returns the typed empty frame
+    # zero-row dynamic overwrite next to an earlier batch: the read-back
+    # is the whole table (the earlier batch), not an empty frame
+    dyn = {"partitionOverwriteMode": "dynamic"}
+    for b, frame in enumerate((df, empty)):
+        got = P._write_stage(
+            spark, out, "r1", "s_batches", frame.withColumn("batch_id", F.lit(b)),
+            partition_by=["batch_id"], writer_options=dyn,
+        )
+    assert sorted((r.id, r.v, r.batch_id) for r in got.collect()) == [
+        (1, "a", 0), (2, "b", 0)
+    ]
+    # zero-row partitioned write leaves no parquet file: fallback
+    # returns the typed empty frame without reading
     monkeypatch.setattr(DataFrameReader, "parquet", broken)
-    got = P._write_stage(spark, out, "r1", "s_empty", empty)
+    got = P._write_stage(spark, out, "r1", "s_empty", empty, partition_by=["v"])
     assert got.count() == 0 and got.schema == empty.schema
     # non-empty write: the same failure must propagate
     with pytest.raises(Exception, match="simulated read-back failure"):
