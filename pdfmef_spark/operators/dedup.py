@@ -21,6 +21,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from pdfmef_spark.operators.linking import delta_bucket_pairs
+
 # Persisted intermediates of the four pair generators, in creation
 # order. CacheManager holds cached plans STRONGLY until an explicit
 # unpersist/clearCache — Spark's ContextCleaner does NOT release them
@@ -95,10 +97,47 @@ def word_shingles(col, k: int = 3):
     )
 
 
+def _shingled(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(id, sh): each document's distinct word k-gram array."""
+    return docs.select(
+        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
+    )
+
+
+def _self_join_pairs(buckets: DataFrame, keys: list[str]) -> DataFrame:
+    """Distinct (a, b), a < b, of ids sharing a bucket: the equi
+    self-join of an (id, *keys) bucket table on its keys."""
+    cond = F.col(f"x.{keys[0]}") == F.col(f"y.{keys[0]}")
+    for key in keys[1:]:
+        cond = cond & (F.col(f"x.{key}") == F.col(f"y.{key}"))
+    return (
+        buckets.alias("x")
+        .join(buckets.alias("y"), cond & (F.col("x.id") < F.col("y.id")))
+        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
+        .dropDuplicates(["a", "b"])
+    )
+
+
+def _verified_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, jaccard): candidate pairs whose exact shingle Jaccard is
+    >= threshold, with both members' arrays joined from ``sh`` (id, sh)."""
+    return (
+        cand.join(sh.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
+        .join(sh.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("sh_a", "sh_b"))
+            / F.size(F.array_union("sh_a", "sh_b")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     k: int = 3, threshold: float = 0.8, block_cap: int | None = 64,
-    cap_obs=None, materialize: bool = True,
+    cap_obs=None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs blocked by shared shingle.
 
@@ -115,18 +154,14 @@ def ngram_jaccard_pairs(
     collision only adds a candidate pair that exact-Jaccard verification
     discards, so results are identical (pinned equal at sf0.1) while
     the blocking exchange shuffles 8 bytes per row instead of a word
-    trigram; the cap itself still counts true gram strings. `materialize`
-    persists the (id, shingles) base (feeds the explode + two member
-    joins — three scans of the corpus otherwise) and the capped (id,
-    gram-hash) table the self-join reads twice; with the groupBy-based
-    cap below, measured warm at sf0.1: 13.0 s -> 8.9 s capped (within
-    noise of uncapped), identical 256-pair result.
+    trigram; the cap itself still counts true gram strings. The (id,
+    shingles) base (feeds the explode + two member joins — three scans
+    of the corpus otherwise) and the capped (id, gram-hash) table the
+    self-join reads twice are persisted; with the groupBy-based cap
+    below, measured warm at sf0.1: 13.0 s -> 8.9 s capped (within noise
+    of uncapped), identical 256-pair result.
     """
-    base = docs.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    )
-    if materialize:
-        base = _persist(base)
+    base = _persist(_shingled(docs, id_col, text_col, k))
     ex = base.select("id", F.explode("sh").alias("g"))
     if block_cap is not None:
         # Bucket sizes via groupBy + join-back, NOT a window over the
@@ -153,27 +188,8 @@ def ngram_jaccard_pairs(
             ),
             "gsize", block_cap, cap_obs,
         )
-    ex = ex.select("id", F.xxhash64("g").alias("gh"))
-    if materialize:
-        ex = _persist(ex)
-    cand = (
-        ex.alias("x")
-        .join(ex.alias("y"), (F.col("x.gh") == F.col("y.gh")) & (F.col("x.id") < F.col("y.id")))
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .distinct()
-    )
-    pairs = (
-        cand.join(base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return pairs
+    ex = _persist(ex.select("id", F.xxhash64("g").alias("gh")))
+    return _verified_jaccard(_self_join_pairs(ex, ["gh"]), base, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -192,11 +208,25 @@ def minhash_signature(shingle_col, n_hashes: int = 64):
     )
 
 
+def _minhash_bands(base: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
+    """(id, band, bh): the banded MinHash bucket table of an (id, sh)
+    base — n_bands hashes of n_hashes/n_bands signature rows each."""
+    r = n_hashes // n_bands
+    sig = base.withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
+    band_arr = F.transform(
+        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        lambda b: F.xxhash64(
+            *[F.element_at(F.col("sig"), b * r + j + 1) for j in range(r)]
+        ),
+    )
+    return sig.select("id", F.posexplode(band_arr).alias("band", "bh"))
+
+
 def minhash_dedup_pairs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     k: int = 3, n_hashes: int = 64, n_bands: int = 16,
     verify_threshold: float = 0.7, bucket_cap: int = 64,
-    cap_obs=None, materialize: bool = True,
+    cap_obs=None,
 ) -> DataFrame:
     """Near-duplicate pairs: shingle -> MinHash -> banded buckets ->
     bucket self-join -> exact-Jaccard verification.
@@ -207,18 +237,13 @@ def minhash_dedup_pairs(
     exchange AND the self-join (16 copies of the corpus' shingles in
     shuffle bytes at n_bands=16); now shingle arrays are joined back
     from the base table only for surviving candidate pairs, which the
-    cap bounds. `materialize` persists the (id, shingles) base (feeds
-    the signature computation + two member joins) and the narrow band
-    table (the self-join reads it twice, and `id < id` pushed-filter
-    asymmetry defeats exchange reuse — the simhash_dedup_pairs
-    analysis); measured at sf0.1: 17.2 s -> 13.9 s warm, identical
+    cap bounds. The (id, shingles) base (feeds the signature
+    computation + two member joins) and the narrow band table (the
+    self-join reads it twice, and `id < id` pushed-filter asymmetry
+    defeats exchange reuse — the simhash_dedup_pairs analysis) are
+    persisted; measured at sf0.1: 17.2 s -> 13.9 s warm, identical
     256-pair result."""
-    r = n_hashes // n_bands
-    base = docs.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    ).filter(F.size("sh") > 0)
-    if materialize:
-        base = _persist(base)
+    base = _persist(_shingled(docs, id_col, text_col, k).filter(F.size("sh") > 0))
     # Signature + banding stay on the interpreted nested-transform path
     # DELIBERATELY (round 6, measured): the explode + 64-min-aggregate
     # rewrite that wins 3.5x for linking's ~20-char norms LOSES here —
@@ -230,42 +255,13 @@ def minhash_dedup_pairs(
     # and reverted: unlike the ngram path, the window's (band, bh)
     # exchange is exactly the partitioning the bucket self-join reuses,
     # so replacing it ADDS an exchange (50k docs: 23.4 s).
-    sig = base.withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
-    band_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.xxhash64(
-            *[F.element_at(F.col("sig"), b * r + j + 1) for j in range(r)]
-        ),
-    )
-    bands = sig.select("id", F.posexplode(band_arr).alias("band", "bh"))
-    if materialize:
-        bands = _persist(bands)
+    bands = _persist(_minhash_bands(base, n_hashes, n_bands))
     w = W.partitionBy("band", "bh")
     bands = _observed_cap_filter(
         bands.withColumn("bsize", F.count("*").over(w)), "bsize", bucket_cap, cap_obs
     )
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    return (
-        cand.join(base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    cand = _self_join_pairs(bands, ["band", "bh"])
+    return _verified_jaccard(cand, base, verify_threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -381,7 +377,6 @@ def simhash_signatures(
 def simhash_dedup_pairs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     max_hamming: int = 3, chunk_cap: int = 4096, cap_obs=None,
-    materialize_sigs: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming.
 
@@ -406,17 +401,14 @@ def simhash_dedup_pairs(
     sig-equality joins lack) defeat Spark's exchange-reuse
     canonicalization, so an unpersisted plan scans the TEXT corpus
     once per branch and recomputes the 15-traversal signature each
-    time. `materialize_sigs` therefore persists the two-column
-    signature table (MEMORY_AND_DISK — a few dozen bytes/doc vs
-    re-reading the full text 5x; measured at sf0.1: 18.8 s -> 7.5 s cold, 11.0 s -> 4.3 s warm).
-    The cache is NOT auto-released (CacheManager holds cached plans
-    until an explicit unpersist) — long-lived sessions call
-    :func:`release_caches` once results are materialized; pass False to
-    keep the operator fully lazy.
+    time. The two-column signature table is therefore persisted
+    (MEMORY_AND_DISK — a few dozen bytes/doc vs re-reading the full
+    text 5x; measured at sf0.1: 18.8 s -> 7.5 s cold, 11.0 s -> 4.3 s
+    warm). The cache is NOT auto-released (CacheManager holds cached
+    plans until an explicit unpersist) — long-lived sessions call
+    :func:`release_caches` once results are materialized.
     """
-    base = simhash_signatures(docs, id_col=id_col, text_col=text_col)
-    if materialize_sigs:
-        base = _persist(base)
+    base = _persist(simhash_signatures(docs, id_col=id_col, text_col=text_col))
     sigs = base.select("sig").distinct()
     chunks = sigs.select(
         "sig",
@@ -514,7 +506,7 @@ def _lsh_table_keys_udf(tables):
 def embedding_dup_pairs(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     threshold: float = 0.95, n_planes: int = 16, n_tables: int = 4,
-    bucket_cap: int = 512, cap_obs=None, materialize: bool = True,
+    bucket_cap: int = 512, cap_obs=None,
 ) -> DataFrame:
     """Near-identical embeddings via sign-LSH blocking + exact cosine verify.
 
@@ -525,9 +517,9 @@ def embedding_dup_pairs(
     table is (id, tbl, key) — the embedding vectors are joined back
     from the base table only for surviving candidate pairs, instead of
     shuffling n_tables copies of every vector through the bucket
-    exchange and self-join. `materialize` persists the (id, vector)
-    base so the Arrow-batch key UDF runs once and the two member joins
-    read the cache instead of re-scanning parquet.
+    exchange and self-join. The (id, vector) base is persisted so the
+    Arrow-batch key UDF runs once and the two member joins read the
+    cache instead of re-scanning parquet.
     """
     import numpy as np
 
@@ -535,28 +527,14 @@ def embedding_dup_pairs(
     rng = np.random.default_rng(42)
     tables = rng.standard_normal((n_tables, n_planes, dim))
 
-    base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    if materialize:
-        base = _persist(base)
+    base = _persist(emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     keyed = base.withColumn("ks", _lsh_table_keys_udf(tables)(F.col("v")))
-    buckets = keyed.select("id", F.posexplode("ks").alias("tbl", "key"))
-    if materialize:
-        buckets = _persist(buckets)
+    buckets = _persist(keyed.select("id", F.posexplode("ks").alias("tbl", "key")))
     w = W.partitionBy("tbl", "key")
     buckets = _observed_cap_filter(
         buckets.withColumn("bsize", F.count("*").over(w)), "bsize", bucket_cap, cap_obs
     )
-    cand = (
-        buckets.alias("x")
-        .join(
-            buckets.alias("y"),
-            (F.col("x.tbl") == F.col("y.tbl"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    cand = _self_join_pairs(buckets, ["tbl", "key"])
     return (
         cand.join(base.select(F.col("id").alias("a"), F.col("v").alias("va")), "a")
         .join(base.select(F.col("id").alias("b"), F.col("v").alias("vb")), "b")
@@ -567,16 +545,12 @@ def embedding_dup_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Incremental dedup (round 6, VERDICT r5 #4 — the linking delta design
-# transferred): block keys are pure functions of the text, so per-batch
-# key tables are append-only; candidate generation expands only buckets
-# a NEW document landed in and emits only pairs with >= 1 new member.
-# Pairs among old members were candidates on an earlier batch, so the
-# caller's accumulated pair table already holds their verified
-# survivors: accumulated ∪ delta == full recompute, UNLESS a touched
-# bucket CROSSED its cap this batch (its old pairs must vanish with the
-# bucket — only a full rebuild reproduces that), which is detected and
-# returned for fallback exactly like linking.delta_candidate_pairs.
+# Incremental dedup: block keys are pure functions of the text, so
+# per-batch key tables are append-only, and candidate generation is
+# linking.delta_bucket_pairs over the accumulated key table — the same
+# kernel as incremental linking: only buckets a NEW document landed in
+# expand, only pairs with >= 1 new member emit, and a touched bucket
+# that CROSSED its cap this batch is returned for full-rebuild fallback.
 # ---------------------------------------------------------------------------
 
 
@@ -587,18 +561,8 @@ def minhash_block_keys(
     """(id, band, bh): the banded MinHash bucket table — a pure function
     of the text, identical to the blocking table minhash_dedup_pairs
     builds internally, exposed so batches can persist their keys once."""
-    r = n_hashes // n_bands
-    base = docs.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    ).filter(F.size("sh") > 0)
-    sig = base.withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
-    band_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.xxhash64(
-            *[F.element_at(F.col("sig"), b * r + j + 1) for j in range(r)]
-        ),
-    )
-    return sig.select("id", F.posexplode(band_arr).alias("band", "bh"))
+    base = _shingled(docs, id_col, text_col, k).filter(F.size("sh") > 0)
+    return _minhash_bands(base, n_hashes, n_bands)
 
 
 def ngram_block_keys(
@@ -606,62 +570,24 @@ def ngram_block_keys(
 ) -> DataFrame:
     """(id, g): exploded word-k-gram blocking keys (the gram STRING, so
     the delta cap counts true grams exactly like the full path)."""
-    base = docs.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    )
-    return base.select("id", F.explode("sh").alias("g"))
+    return _shingled(docs, id_col, text_col, k).select("id", F.explode("sh").alias("g"))
 
 
-def _delta_bucket_pairs(
-    keyed_all: DataFrame, key_cols: list[str], cap: int
+def _jaccard_pairs_delta(
+    docs: DataFrame, keyed_all: DataFrame, keys: list[str], cap: int,
+    id_col: str, text_col: str, k: int, threshold: float,
 ) -> tuple[DataFrame, DataFrame]:
-    """Delta candidate pairs over an accumulated (id, *key_cols,
-    is_new) key table: only buckets touched by a new id expand, only
-    pairs with >= 1 new member emit. Returns (pairs(a, b), crossed) —
-    ``crossed`` non-empty iff a touched bucket crossed its cap with
-    >= 2 pre-existing members (caller must fall back to full)."""
-    touched = keyed_all.filter(F.col("is_new")).select(*key_cols).distinct()
-    members = keyed_all.join(touched, key_cols)
-    w = W.partitionBy(*key_cols)
-    sized = members.withColumn("n", F.count(F.lit(1)).over(w)).withColumn(
-        "n_new", F.sum(F.col("is_new").cast("int")).over(w)
-    )
-    crossed = sized.filter(
-        (F.col("n") > cap)
-        & (F.col("n") - F.col("n_new") >= 2)
-        & (F.col("n") - F.col("n_new") <= cap)
-    ).select(*key_cols, "n", "n_new")
-    small = (
-        sized.filter((F.col("n") >= 2) & (F.col("n") <= cap))
-        .groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_set(F.struct("id", "is_new"))).alias("ms"))
-    )
-    pairs = small.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ms"), i + 2,
-                            F.greatest(F.size("ms") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(
-                            x["id"].alias("a"),
-                            y["id"].alias("b"),
-                            (x["is_new"] | y["is_new"]).alias("keep"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return (
-        pairs.filter(F.col("p.keep"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .distinct(),
-        crossed,
-    )
+    """Delta candidates over the accumulated (id, *keys, is_new) key
+    table, verified by exact shingle Jaccard. Shingle arrays are
+    computed ONLY for candidate members (a semi-join against the docs
+    table), so the per-batch cost is O(new-touched buckets +
+    candidates), never a corpus re-shingle. Returns (pairs, crossed)."""
+    cand, crossed = delta_bucket_pairs(keyed_all, [], keys, "id", cap)
+    ids = cand.select(F.col("a").alias("id")).union(
+        cand.select(F.col("b").alias("id"))
+    ).distinct()
+    sh = _shingled(docs, id_col, text_col, k).join(ids, "id", "leftsemi")
+    return _verified_jaccard(cand, sh, threshold), crossed
 
 
 def minhash_dedup_pairs_delta(
@@ -672,35 +598,14 @@ def minhash_dedup_pairs_delta(
     """Incremental MinHash near-dup pairs.
 
     ``keyed_all``: union of every batch's :func:`minhash_block_keys`
-    output plus ``is_new`` marking ids first seen THIS batch. Shingle
-    arrays for exact-Jaccard verification are computed ONLY for
-    candidate members (a semi-join against the docs table), so the
-    per-batch cost is O(new-touched buckets + candidates), never a
-    corpus re-shingle. accumulated_pairs ∪ delta == full recompute
-    (pinned by tests) unless ``crossed`` is non-empty.
+    output plus ``is_new`` marking ids first seen THIS batch.
+    accumulated_pairs ∪ delta == full recompute (pinned by tests)
+    unless ``crossed`` is non-empty.
     """
-    cand, crossed = _delta_bucket_pairs(keyed_all, ["band", "bh"], bucket_cap)
-    ids = cand.select(F.col("a").alias("id")).union(
-        cand.select(F.col("b").alias("id"))
-    ).distinct()
-    sh = (
-        docs.select(
-            F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-        )
-        .join(ids, "id", "leftsemi")
+    return _jaccard_pairs_delta(
+        docs, keyed_all, ["band", "bh"], bucket_cap, id_col, text_col, k,
+        verify_threshold,
     )
-    pairs = (
-        cand.join(sh.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return pairs, crossed
 
 
 def ngram_jaccard_pairs_delta(
@@ -710,28 +615,9 @@ def ngram_jaccard_pairs_delta(
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental capped n-gram Jaccard pairs; ``keyed_all`` is the
     accumulated :func:`ngram_block_keys` union with ``is_new``."""
-    cand, crossed = _delta_bucket_pairs(keyed_all, ["g"], block_cap)
-    ids = cand.select(F.col("a").alias("id")).union(
-        cand.select(F.col("b").alias("id"))
-    ).distinct()
-    sh = (
-        docs.select(
-            F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-        )
-        .join(ids, "id", "leftsemi")
+    return _jaccard_pairs_delta(
+        docs, keyed_all, ["g"], block_cap, id_col, text_col, k, threshold
     )
-    pairs = (
-        cand.join(sh.select(F.col("id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("id").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return pairs, crossed
 
 
 # ---------------------------------------------------------------------------

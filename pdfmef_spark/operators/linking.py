@@ -9,8 +9,8 @@ in one entity.
 Scale design (the part that must survive 10^12 docs):
   * the quadratic surface x surface space is never materialized — only
     LSH-band buckets and last-token blocks generate candidates;
-  * MinHash signatures are computed entirely JVM-side (shingles via
-    sequence/transform, per-seed xxhash64 + array_min) — no Python;
+  * MinHash signatures are computed entirely JVM-side (exploded
+    shingles, per-seed xxhash64 + min aggregate) — no Python;
   * hot buckets are frequency-capped (a stopword-ish token or a
     degenerate band would otherwise explode one reducer — the same hub
     problem pdfmef's `cites` edges have);
@@ -42,43 +42,11 @@ def surface_keys(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _band_hashes(shingle_col):
-    """Array of N_BANDS band hashes from JVM-side MinHash signatures.
-
-    One compact nested expression — hash index rides as a lambda
-    variable into xxhash64(shingle, idx). (Unrolling 64 copies of
-    array_min(transform(...)) makes Janino compile a huge generated
-    class: ~15-20 s of fixed plan-compile latency per job.)
-
-    NOTE: higher-order functions are CodegenFallback — every one of the
-    64 x n_shingles xxhash64 evaluations here runs interpreted. Kept for
-    the small-vocabulary / single-projection path and tests;
-    :func:`minhash_signatures` is the measured-faster production path
-    (3.5x on a 120k-surface vocabulary) used by candidate_pairs.
-    """
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(N_HASHES - 1)),
-        lambda i: F.array_min(F.transform(shingle_col, lambda s: F.xxhash64(s, i))),
-    )
-
-    def bands_of(sig_col):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-            lambda b: F.xxhash64(
-                *[
-                    F.element_at(sig_col, b * ROWS_PER_BAND + r + 1)
-                    for r in range(ROWS_PER_BAND)
-                ]
-            ),
-        )
-
-    return sig, bands_of
-
-
 def minhash_signatures(norms: DataFrame) -> DataFrame:
     """(type, norm, h0..h63) MinHash signatures, whole-stage-codegen —
-    bit-identical to the `_band_hashes` signature array, with no
-    interpreted higher-order functions in the per-row hot path.
+    bit-identical to the interpreted ``dedup.minhash_signature(
+    char_shingles(norm), N_HASHES)`` array, with no interpreted
+    higher-order functions in the per-row hot path.
 
     Shape: explode each (type, norm) into its 3-char shingles, compute
     the 64 seeded ``xxhash64(shingle, seed)`` columns INLINE in the
@@ -109,6 +77,33 @@ def minhash_signatures(norms: DataFrame) -> DataFrame:
     )
 
 
+def _bkey_cap():
+    """Per-row member cap of a (type, bkey) bucket, by blocking family:
+    LSH band buckets ("b:") cap at BUCKET_CAP, token / prefix blocks
+    ("t:"/"p:") at TOKEN_BLOCK_CAP."""
+    return F.when(
+        F.col("bkey").startswith("b:"), F.lit(BUCKET_CAP)
+    ).otherwise(F.lit(TOKEN_BLOCK_CAP))
+
+
+def bucket_pairs(members, pair):
+    """explode(every pair(members[i], members[j]), i < j) of the array
+    Column ``members``, expanded bucket-locally JVM-side (transform x
+    slice) — the one pair-expansion expression of every blocking path,
+    full and delta, in linking and dedup."""
+    return F.explode(
+        F.flatten(
+            F.transform(
+                members,
+                lambda x, i: F.transform(
+                    F.slice(members, i + 2, F.greatest(F.size(members) - i - 1, F.lit(0))),
+                    lambda y: pair(x, y),
+                ),
+            )
+        )
+    )
+
+
 def _bucket_pairs_capped(keyed: DataFrame, cap_obs=None) -> DataFrame:
     """Generate (type, a, b) pairs across ALL blocking families with ONE
     shuffle: groupBy (type, bkey) -> sorted member list (capped) ->
@@ -117,8 +112,7 @@ def _bucket_pairs_capped(keyed: DataFrame, cap_obs=None) -> DataFrame:
     Pair expansion happens bucket-locally inside codegen and hot buckets
     are dropped by the cap before any pair materializes — the shape that
     survives 10^12-row inputs. The member cap depends on the bkey family
-    prefix: LSH band buckets ("b:") cap at BUCKET_CAP, token / prefix
-    blocks ("t:"/"p:") at TOKEN_BLOCK_CAP.
+    prefix (:func:`_bkey_cap`).
 
     `cap_obs` (a pyspark Observation) rides the same job and records how
     much the caps actually dropped — buckets_dropped / members_dropped —
@@ -143,9 +137,7 @@ def _bucket_pairs_capped(keyed: DataFrame, cap_obs=None) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    cap = F.when(
-        F.col("bkey").startswith("b:"), F.lit(BUCKET_CAP)
-    ).otherwise(F.lit(TOKEN_BLOCK_CAP))
+    cap = _bkey_cap()
     w = W.partitionBy("type", "bkey")
     # keyed is distinct in (type, bkey, norm) — each norm tags each of
     # its block keys exactly once — so the window count == member count
@@ -167,20 +159,8 @@ def _bucket_pairs_capped(keyed: DataFrame, cap_obs=None) -> DataFrame:
     )
     pairs = small.select(
         F.col("type"),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("members"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("members"),
-                            i + 2,
-                            F.greatest(F.size("members") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
+        bucket_pairs(
+            F.col("members"), lambda x, y: F.struct(x.alias("a"), y.alias("b"))
         ).alias("p"),
     )
     return pairs.select("type", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
@@ -247,36 +227,49 @@ def tag_block_keys(norms: DataFrame) -> DataFrame:
 
 
 def delta_candidate_pairs(keyed_all: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Incremental candidate generation over an accumulated key table.
+    """Incremental linking candidates over an accumulated key table.
 
     ``keyed_all``: (type, norm, bkey, is_new) — the union of every
     batch's ``tag_block_keys`` output, with ``is_new`` marking norms
-    first seen THIS tick. Only buckets touched by a new norm are
-    expanded, and only pairs with >= 1 new member are emitted: pairs
-    among old members were candidates on an earlier tick (a norm's
-    bkeys never change), so the caller's accumulated links table
-    already holds their scored survivors. Per-tick cost is
-    O(delta x bucket density + one column-pruned scan of the key
-    table) instead of re-running shingle -> 64-hash MinHash signatures
-    over the whole vocabulary.
+    first seen THIS tick. Returns ((type, a, b) pairs, crossed) from
+    :func:`delta_bucket_pairs` over (type, bkey) buckets under the
+    per-family bkey-prefix cap. Per-tick cost is O(delta x bucket
+    density + one column-pruned scan of the key table) instead of
+    re-running shingle -> 64-hash MinHash signatures over the whole
+    vocabulary.
+    """
+    return delta_bucket_pairs(keyed_all, ["type"], ["bkey"], "norm", _bkey_cap())
 
-    Returns (pairs, crossed). ``crossed`` is non-empty iff a touched
-    bucket CROSSED its cap this tick with >= 2 pre-existing members —
-    the one case where full recompute semantics (the bucket's old pairs
-    vanish with the bucket) cannot be reproduced from the accumulated
-    links table, so the caller must fall back to a full rebuild for
-    this tick. Buckets already over cap stay skipped (matching the
-    full path, which drops them), so a perpetually hot block does not
-    force a rebuild every tick — only its crossing tick does.
+
+def delta_bucket_pairs(
+    keyed_all: DataFrame, by: list[str], keys: list[str], member: str, cap
+) -> tuple[DataFrame, DataFrame]:
+    """Delta candidate pairs over an accumulated (*by, *keys, member,
+    is_new) block-key table — the one incremental kernel behind linking
+    and dedup. A bucket is one (*by, *keys) value; ``cap`` is its member
+    cap, an int or a per-row Column.
+
+    Only buckets touched by a new member are expanded, and only pairs
+    with >= 1 new member are emitted: pairs among old members were
+    candidates on an earlier tick (a member's block keys never change),
+    so the caller's accumulated output already holds their verified
+    survivors. Returns ((*by, a, b) pairs, crossed).
+
+    ``crossed`` is non-empty iff a touched bucket CROSSED its cap this
+    tick with >= 2 pre-existing members — the one case where full
+    recompute semantics (the bucket's old pairs vanish with the bucket)
+    cannot be reproduced from the accumulated output, so the caller
+    must fall back to a full rebuild for this tick. Buckets already
+    over cap stay skipped (matching the full path, which drops them),
+    so a perpetually hot block does not force a rebuild every tick —
+    only its crossing tick does.
     """
     from pyspark.sql import Window as W
 
-    touched = keyed_all.filter(F.col("is_new")).select("type", "bkey").distinct()
-    members = keyed_all.join(touched, ["type", "bkey"])
-    cap = F.when(
-        F.col("bkey").startswith("b:"), F.lit(BUCKET_CAP)
-    ).otherwise(F.lit(TOKEN_BLOCK_CAP))
-    w = W.partitionBy("type", "bkey")
+    bucket = [*by, *keys]
+    touched = keyed_all.filter(F.col("is_new")).select(*bucket).distinct()
+    members = keyed_all.join(touched, bucket)
+    w = W.partitionBy(*bucket)
     sized = members.withColumn("n", F.count(F.lit(1)).over(w)).withColumn(
         "n_new", F.sum(F.col("is_new").cast("int")).over(w)
     )
@@ -284,39 +277,28 @@ def delta_candidate_pairs(keyed_all: DataFrame) -> tuple[DataFrame, DataFrame]:
         (F.col("n") > cap)
         & (F.col("n") - F.col("n_new") >= 2)
         & (F.col("n") - F.col("n_new") <= cap)
-    ).select("type", "bkey", "n", "n_new")
+    ).select(*bucket, "n", "n_new")
     small = (
         sized.filter((F.col("n") >= 2) & (F.col("n") <= cap))
-        .groupBy("type", "bkey")
-        # struct sort orders by norm (first field) — same member order
-        # as the full path's array_sort(collect_set(norm))
-        .agg(F.array_sort(F.collect_set(F.struct("norm", "is_new"))).alias("members"))
+        .groupBy(*bucket)
+        # struct sort orders by member (first field) — same member order
+        # as the full path's array_sort(collect_set(member))
+        .agg(F.array_sort(F.collect_set(F.struct(member, "is_new"))).alias("members"))
     )
     pairs = small.select(
-        F.col("type"),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("members"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("members"),
-                            i + 2,
-                            F.greatest(F.size("members") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(
-                            x["norm"].alias("a"),
-                            y["norm"].alias("b"),
-                            (x["is_new"] | y["is_new"]).alias("keep"),
-                        ),
-                    ),
-                )
-            )
+        *by,
+        bucket_pairs(
+            F.col("members"),
+            lambda x, y: F.struct(
+                x[member].alias("a"),
+                y[member].alias("b"),
+                (x["is_new"] | y["is_new"]).alias("keep"),
+            ),
         ).alias("p"),
     )
     return (
         pairs.filter(F.col("p.keep"))
-        .select("type", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .select(*by, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .distinct(),
         crossed,
     )

@@ -30,7 +30,6 @@ def two_hop_reach(
     src: str = "src",
     dst: str = "dst",
     hub_cap: int | None = None,
-    materialize: bool = True,
     approx_rsd: float | None = None,
 ) -> DataFrame:
     """-> (node, reach2): distinct nodes within <= 2 hops, self excluded.
@@ -47,9 +46,7 @@ def two_hop_reach(
     map-side, so the shuffle carries O(nodes x register_bytes)
     regardless of neighborhood size. Tolerance-gated in pytest; the
     exact variant stays the hash-oracled one."""
-    und = undirected_simple(edges, src, dst)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = undirected_simple(edges, src, dst).localCheckpoint(eager=True)
     sym = und.select(F.col("a").alias("node"), F.col("b").alias("nb")).unionAll(
         und.select(F.col("b").alias("node"), F.col("a").alias("nb"))
     )

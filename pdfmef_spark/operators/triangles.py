@@ -42,20 +42,18 @@ def undirected_simple(edges: DataFrame, src: str = "src", dst: str = "dst") -> D
 
 
 def triangles(
-    edges: DataFrame, src: str = "src", dst: str = "dst", materialize: bool = True
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """-> one row per triangle (x, v, w), each triangle exactly once.
 
-    ``materialize`` localCheckpoints the two shared relations (the
-    canonical undirected edge list and the oriented edge list): the
+    The two shared relations (the canonical undirected edge list and
+    the oriented edge list) are localCheckpoint-ed: the
     oriented list is consumed THREE times (both wedge sides + the
     closing join) and Catalyst does not reuse the subplan across them —
     unmaterialized, a 10^9-edge graph would pay the dedup + degree +
     orientation shuffles three times over.
     """
-    und = undirected_simple(edges, src, dst)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = undirected_simple(edges, src, dst).localCheckpoint(eager=True)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
@@ -76,8 +74,7 @@ def triangles(
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddeg"),
     )
-    if materialize:
-        o = o.localCheckpoint(eager=True)
+    o = o.localCheckpoint(eager=True)
     e1 = o.select("src", F.col("dst").alias("v"), F.col("ddeg").alias("dv"))
     e2 = o.select("src", F.col("dst").alias("w"), F.col("ddeg").alias("dw"))
     wedges = e1.join(e2, "src").filter(
@@ -91,10 +88,10 @@ def triangles(
 
 
 def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst", materialize: bool = True
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """-> single row (n_triangles)."""
-    return triangles(edges, src, dst, materialize).agg(
+    return triangles(edges, src, dst).agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
 
@@ -130,7 +127,7 @@ def triangles_oracle_sql(pairs_sql: str) -> str:
 
 
 def node_clustering(
-    edges: DataFrame, src: str = "src", dst: str = "dst", materialize: bool = True
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Local clustering coefficient per node: 2*tri(v) / (d(v)*(d(v)-1)).
 
@@ -140,16 +137,14 @@ def node_clustering(
     the oracle (:func:`node_clustering_oracle_sql`) hash-matches with a
     single final rounding. Nodes with degree < 2 are excluded (the
     coefficient is undefined)."""
-    und = undirected_simple(edges, src, dst)
-    if materialize:
-        und = und.localCheckpoint(eager=True)
+    und = undirected_simple(edges, src, dst).localCheckpoint(eager=True)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    tri = triangles(und, src="a", dst="b", materialize=materialize)
+    tri = triangles(und, src="a", dst="b")
     per_node = (
         tri.select(F.explode(F.array("x", "v", "w")).alias("node"))
         .groupBy("node")

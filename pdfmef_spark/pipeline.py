@@ -454,8 +454,9 @@ def run_pipeline_incremental(
       type, edges by pred); byte-identity with from-scratch is pinned
       by tests. Fallbacks to
       the full merged-triples rebuild: first batch, a crash-retry of a
-      batch whose tail already wrote (manifest run_id guard — the delta
-      is already folded into prev_edges), and a component SPLIT (only
+      batch whose tail already started (a "tail started" manifest row
+      keyed on batch_id — the delta may already be folded into prev
+      links / edges), and a component SPLIT (only
       possible when LSH candidate caps dropped links). Incremental
       connected components is still not worth its complexity at this
       stage-size ratio: at 10^12 docs the extract stages are ~all of
@@ -519,11 +520,15 @@ def run_pipeline_incremental(
         extracted_d.unpersist()
 
     # graph-tail mode: delta + remap when the previous batch's tail
-    # output exists AND was not written by THIS batch_id (a crash after
-    # the tail wrote but before the ledger committed re-runs the same
-    # batch — its delta edges are already folded into prev_edges, so
-    # remapping them again would double-count; the retry rebuilds from
-    # the merged triples instead, which is idempotent). The previous
+    # output exists AND THIS batch_id never started its tail (a crash
+    # after a tail write but before the ledger committed re-runs the
+    # same batch — its delta may already be folded into prev links /
+    # edges, so applying it again would double-count; the retry
+    # rebuilds from the merged triples instead, which is idempotent).
+    # The guard is a "tail started" manifest row keyed on batch_id,
+    # written before the first tail write: a retry may carry any
+    # run_id, and a batch with no new norms writes no bucket_keys
+    # partition, so neither can mark a poisoned retry. The previous
     # snapshots are localCheckpoint-ed BEFORE the overwrite of their
     # dirs — at cluster scale this read-prev-then-overwrite sequence is
     # an Iceberg snapshot read, local parquet has no isolation.
@@ -537,19 +542,17 @@ def run_pipeline_incremental(
     tail_ready = all(
         _has_parquet(f"{out_dir}/{s}") for s in ("assignments", "nodes", "edges")
     )
-    poisoned = False
-    if os.path.exists(_manifest_path(out_dir)):
-        m = spark.read.parquet(_manifest_path(out_dir))
-        last = (
-            m.filter(
-                (F.col("status") == "complete")
-                & F.col("stage").isin("links", "assignments", "nodes", "edges")
-            )
-            .orderBy(F.desc("updated_ts"))
-            .select("run_id")
-            .first()
+    poisoned = os.path.exists(_manifest_path(out_dir)) and (
+        spark.read.parquet(_manifest_path(out_dir))
+        .filter(
+            (F.col("stage") == "tail")
+            & (F.col("partition_id") == batch_id)
+            & (F.col("status") == "started")
         )
-        poisoned = last is not None and last.run_id == run_id
+        .limit(1)
+        .count()
+        > 0
+    )
     use_delta = tail_ready and not poisoned
     if use_delta:
         prev_assign = spark.read.parquet(f"{out_dir}/assignments").localCheckpoint()
@@ -634,6 +637,10 @@ def run_pipeline_incremental(
                         d_pairs, threshold=link_threshold
                     ).localCheckpoint()
                     links_mode = "delta"
+        # every write from here on may fold this batch into the tail
+        _append_manifest(
+            out_dir, [(run_id, "tail", batch_id, "started", None, None, None, None, None)]
+        )
         if links_mode == "delta":
             links = stage("links", lambda: prev_links.unionByName(delta_links))
         else:

@@ -250,27 +250,17 @@ def test_simhash_signatures_match_projection(spark, docs):
 
 
 def test_minhash_band_table_matches_lambda_path(spark, docs):
-    """The explode + 64-min-aggregate banding (round 6) reproduces the
-    interpreted minhash_signature band hashes exactly, so the candidate
-    set is unchanged."""
+    """Production's banded MinHash table (minhash_block_keys: the
+    interpreted minhash_signature bands) equals an independent oracle:
+    the codegen explode + 64-min-aggregate form of the same signature,
+    banded by xxhash64 over each band's rows. Same hashes, same per-seed
+    minimum, so the candidate set is pinned."""
     n_hashes, n_bands, r = 64, 16, 4
+    want = {(x.id, x.band, x.bh) for x in dedup.minhash_block_keys(docs).collect()}
+
     base = docs.select(
         F.col("doc_id").alias("id"), dedup.word_shingles(F.col("text"), 3).alias("sh")
     ).filter(F.size("sh") > 0)
-    old_sig = base.withColumn("sig", dedup.minhash_signature(F.col("sh"), n_hashes))
-    old_bands = old_sig.select(
-        "id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda b: F.xxhash64(
-                    *[F.element_at(F.col("sig"), b * r + j + 1) for j in range(r)]
-                ),
-            )
-        ).alias("band", "bh"),
-    )
-    want = {(x.id, x.band, x.bh) for x in old_bands.collect()}
-
     ex = base.select("id", F.explode("sh").alias("s"))
     hashed = ex.select(
         "id", *[F.xxhash64("s", F.lit(i)).alias(f"h{i}") for i in range(n_hashes)]
@@ -313,12 +303,9 @@ def test_minhash_delta_equals_full_minus_old(spark, docs):
         docs, keyed_all, bucket_cap=cap
     )
     assert crossed.count() == 0
-    full_all = _pairset(
-        dedup.minhash_dedup_pairs(docs, bucket_cap=cap, materialize=False)
-    )
-    full_old = _pairset(
-        dedup.minhash_dedup_pairs(old, bucket_cap=cap, materialize=False)
-    )
+    full_all = _pairset(dedup.minhash_dedup_pairs(docs, bucket_cap=cap))
+    full_old = _pairset(dedup.minhash_dedup_pairs(old, bucket_cap=cap))
+    dedup.release_caches()
     got = _pairset(delta)
     assert got == full_all - full_old
     assert full_old | got == full_all
@@ -337,16 +324,9 @@ def test_ngram_delta_equals_full_minus_old(spark, docs):
         docs, keyed_all, threshold=0.7, block_cap=cap
     )
     assert crossed.count() == 0
-    full_all = _pairset(
-        dedup.ngram_jaccard_pairs(
-            docs, threshold=0.7, block_cap=cap, materialize=False
-        )
-    )
-    full_old = _pairset(
-        dedup.ngram_jaccard_pairs(
-            old, threshold=0.7, block_cap=cap, materialize=False
-        )
-    )
+    full_all = _pairset(dedup.ngram_jaccard_pairs(docs, threshold=0.7, block_cap=cap))
+    full_old = _pairset(dedup.ngram_jaccard_pairs(old, threshold=0.7, block_cap=cap))
+    dedup.release_caches()
     got = _pairset(delta)
     assert got == full_all - full_old
     assert len(got) > 0

@@ -219,12 +219,16 @@ def test_delta_tail_plan_never_scans_historical_triples(spark, smoke_pages, tmp_
     assert "batch_id=0" not in plan
 
 
-def test_delta_tail_crash_retry_falls_back_to_full(spark, smoke_pages, tmp_path):
+@pytest.mark.parametrize("retry_run_id", [None, "attempt-2"])
+def test_delta_tail_crash_retry_falls_back_to_full(
+    spark, smoke_pages, tmp_path, retry_run_id
+):
     """A retry of a batch whose tail already wrote (crash before the
     ledger commit) must NOT delta-update — its edges are already folded
-    into prev_edges and would double-count. The manifest run_id guard
-    forces the idempotent full rebuild, and the result still matches
-    from-scratch."""
+    into prev_edges and would double-count. The manifest's "tail
+    started" row for the batch_id forces the idempotent full rebuild
+    whatever run_id the retry carries, and the result still matches
+    from-scratch row for row (duplicates included)."""
     import shutil
 
     pages = smoke_pages
@@ -237,13 +241,13 @@ def test_delta_tail_crash_retry_falls_back_to_full(spark, smoke_pages, tmp_path)
     rows, schema = kept.collect(), kept.schema
     shutil.rmtree(f"{inc_dir}/ledger")
     spark.createDataFrame(rows, schema).write.parquet(f"{inc_dir}/ledger")
-    retry = P.run_pipeline_incremental(spark, pages, inc_dir)
+    retry = P.run_pipeline_incremental(spark, pages, inc_dir, run_id=retry_run_id)
     assert retry.results["edges"].metrics["tail_mode"] == "full"
     # the links stage shares the poisoned-retry guard: prev links
     # already contain this batch's delta, so a delta union would dup
     assert retry.results["links"].metrics["links_mode"] == "full"
     run_full = P.run_pipeline(spark, pages, str(tmp_path / "full"))
-    assert _links_set(retry) == _links_set(run_full)
+    assert _rows(retry, "links") == _rows(run_full, "links")
     assert _graph_sets(retry) == _graph_sets(run_full)
 
 
